@@ -519,7 +519,7 @@ object Dedup extends QueryModule {
       // r14 (guide §2.4): `sizes` feeds the prefix build AND both verify
       // legs (na/nb), `prefix` feeds both sides of the candidate
       // self-join — as lineage copies each re-EXECUTED per reference
-      // (JobLogProbe: the two prefix builds alone were 2.4 s + 3.5 s of
+      // (per-job log: the two prefix builds alone were 2.4 s + 3.5 s of
       // q232's 7.3 s). Materialize each once; values unchanged.
       val sizes = Scoped.materialize()(
         grams.groupBy($"doc_id").agg(count(lit(1)).as("n")))

@@ -1,9 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicReference
 
-/** Cache-lifetime hygiene for query builders that persist intermediates.
+/** The engine's eager barriers, and the one way to see behind them.
   *
   * A builder that `persist()`s a subtree referenced by several branches of
   * its returned plan cannot unpersist before returning — the caller's
@@ -12,12 +14,25 @@ import java.nio.file.Files
   * session (executor memory pressure; an OOM at 100 TB operating scale,
   * where a long-lived service would run thousands of such queries).
   *
-  * `materialize` closes the scope: it runs the terminal action itself by
-  * writing the builder's (small, post-aggregation) result to a temp
-  * parquet, releases every persisted input, and hands back the re-read.
-  * The caches live exactly as long as the computation that needs them.
-  * Row order is not preserved across the round-trip — apply the final
-  * `orderBy` to the returned frame, not the argument.
+  *   - `materialize` closes the scope: it runs the terminal action itself
+  *     by writing the builder's (small, post-aggregation) result to a temp
+  *     parquet, releases every persisted input, and hands back the
+  *     re-read. The caches live exactly as long as the computation that
+  *     needs them. Row order is not preserved across the round-trip —
+  *     apply the final `orderBy` to the returned frame, not the argument.
+  *   - `shared` does the same once per key per session for a derived
+  *     table several queries read (the [[Silver]] registry).
+  *   - `checkpoint` pins a frame's partitioning with a lazy local
+  *     checkpoint.
+  *
+  * Each barrier hides its input plan: downstream plans see only a
+  * FileScan or a Scan ExistingRDD. [[capture]] runs a body with a recorder
+  * installed and returns every barrier it reached, each with its input's
+  * QueryExecution planned before the barrier wrote or released anything.
+  * The plan registries (window bounds, shared subtrees, join fan-out) and
+  * the plan-shape tests read barrier plans only through it. Outside
+  * `capture` a barrier records nothing and plans its input only for its
+  * own write.
   */
 private[graft] object Scoped {
 
@@ -46,30 +61,71 @@ private[graft] object Scoped {
     }
   }
 
-  /** Debug hook: the executed plan of the most recent [[materialize]]
-    * INPUT — the plan the materialization boundary would otherwise hide
-    * behind a FileScan. PlanSpec asserts pre-write plan shape through
-    * this; never read on a production path.
+  /** One barrier reached inside [[capture]]:
+    *   - `kind`: "materialize", "shared" (a build), "shared-hit" (a cached
+    *     read) or "checkpoint";
+    *   - `key`: the shared key, for the two shared kinds;
+    *   - `in`: the key of the shared build this barrier ran inside, if any;
+    *   - `input`: the barrier input's QueryExecution, planned before the
+    *     barrier wrote or released anything (a shared-hit plans nothing).
     */
-  @volatile private[graft] var lastMaterializedPlan: String = ""
+  final case class Barrier(
+      kind: String, key: Option[String], in: Option[String],
+      input: Option[QueryExecution])
 
-  /** Audit hook: when installed (WindowBoundsSpec), sees the OPTIMIZED
-    * logical plan of every materialize input and every shared build —
-    * the plans the parquet round-trip otherwise hides behind a FileScan,
-    * which is where most of the engine's window operators live. Never
-    * installed on a production path.
+  private final class Recorder {
+    val barriers = scala.collection.mutable.ListBuffer.empty[Barrier]
+    var open: List[String] = Nil // shared keys being built, innermost first
+  }
+
+  private val recorder = new AtomicReference[Recorder]()
+
+  /** Runs `body` with a recorder installed and returns its result plus one
+    * [[Barrier]] per barrier it reached, in the order each barrier's input
+    * was planned (a barrier nested in a shared build precedes that build).
+    * Captures nest: an inner one shadows the outer for its duration.
     */
-  @volatile private[graft] var planAudit:
-      Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan => Unit] = None
+  def capture[T](body: => T): (T, Seq[Barrier]) = {
+    val r = new Recorder
+    val prev = recorder.getAndSet(r)
+    try {
+      val out = body
+      (out, r.synchronized(r.barriers.toList))
+    } finally recorder.set(prev)
+  }
+
+  private def reached(
+      kind: String, key: Option[String], input: Option[DataFrame]): Unit =
+    Option(recorder.get).foreach { r =>
+      val qe = input.map(_.queryExecution)
+      qe.foreach(_.executedPlan) // plan now, while persisted inputs are cached
+      r.synchronized(r.barriers += Barrier(kind, key, r.open.headOption, qe))
+    }
+
+  private def building[T](key: String)(body: => T): T =
+    Option(recorder.get) match {
+      case None => body
+      case Some(r) =>
+        r.synchronized(r.open = key :: r.open)
+        try body finally r.synchronized(r.open = r.open.tail)
+    }
 
   def materialize(persisted: DataFrame*)(result: DataFrame): DataFrame = {
     val spark = result.sparkSession
-    planAudit.foreach(_(result.queryExecution.optimizedPlan))
-    lastMaterializedPlan = result.queryExecution.executedPlan.toString
+    reached("materialize", None, Some(result))
     val out = newTempDir("graft_mat_")
     result.write.mode("overwrite").parquet(out)
     persisted.foreach(_.unpersist())
     spark.read.parquet(out)
+  }
+
+  /** Localcheckpoint barrier (lazy): pins `df`'s partitioning for the
+    * callers that consume it twice. Inside [[capture]] it records the
+    * input plan the checkpoint's Scan ExistingRDD hides downstream.
+    */
+  def checkpoint(df: DataFrame): DataFrame = {
+    reached("checkpoint", None, Some(df))
+    df.localCheckpoint(false)
   }
 
   /** Materialized DERIVED TABLE, built once per (key) per session.
@@ -114,8 +170,8 @@ private[graft] object Scoped {
     var path = sharedPaths.get(key)
     if (path == null) {
       built.add(key)
-      val (persisted, result) = build
-      planAudit.foreach(_(result.queryExecution.optimizedPlan))
+      val (persisted, result) = building(key)(build)
+      reached("shared", Some(key), Some(result))
       // embed the logical name in the dir so plans/listings show WHICH
       // derived table a scan reads (the slug drops the input-dir path)
       val slug = key.takeWhile(_ != ':').replaceAll("[^A-Za-z0-9_]", "_")
@@ -124,7 +180,7 @@ private[graft] object Scoped {
       persisted.foreach(_.unpersist())
       val prev = sharedPaths.putIfAbsent(key, out)
       path = if (prev == null) out else prev
-    }
+    } else reached("shared-hit", Some(key), None)
     spark.read.parquet(path)
   }
 

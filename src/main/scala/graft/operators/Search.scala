@@ -1018,7 +1018,7 @@ object Search extends QueryModule {
     // r14 (guide §3.1): without hints the candidate self-join and BOTH
     // verify joins BROADCAST a postings-scale table (midTerm / the full
     // weighted table ×2) — each a single-threaded HashedRelation build
-    // of ~1M rows (JobLogProbe: the 0.4–1 s broadcast-thread jobs that
+    // of ~1M rows (per-job log: the 0.4–1 s broadcast-thread jobs that
     // dominated q191). A postings table must never be the broadcast
     // side at corpus scale; shuffled hash joins stream the candidate
     // explosion over parallel exchanges instead.

@@ -758,16 +758,6 @@ object Series extends QueryModule {
     * daily rollup (`ticker`). Package-visible for the hot-symbol-day
     * ScaleBehaviorSpec.
     */
-  /** Debug hook: the executed plan of the most recent chunkedTicks
-    * range-shuffle INPUT — the plan the localCheckpoint boundary hides.
-    * Captured as a THUNK so production calls never pay the extra
-    * analyze/optimize/plan pass (executedPlan is a lazy val forced only
-    * when the ScaleBehaviorSpec assertion reads it).
-    */
-  @volatile private[graft] var lastChunkInputPlanThunk: () => String =
-    () => ""
-  private[graft] def lastChunkInputPlan: String = lastChunkInputPlanThunk()
-
   private[graft] def chunkedTicks(ticks: DataFrame): DataFrame = {
     import ticks.sparkSession.implicits._
     // localCheckpoint PINS the chunk boundaries: the range-shuffled tape
@@ -779,16 +769,8 @@ object Series extends QueryModule {
     // the ContextCleaner once the silver build's parquet write drops the
     // last reference. At cluster scale this is the "write the shuffled
     // tape once" step any segmented-scan silver build pays anyway.
-    val ranged = ticks
-      .repartitionByRange(col("tkr"), col("day"), col("seq"))
-    // the checkpoint hides the range exchange behind a Scan ExistingRDD
-    // in every downstream plan — record the pre-checkpoint plan so the
-    // ScaleBehaviorSpec shape assertion can still see it (the
-    // Scoped.lastMaterializedPlan debug-hook pattern; never read on a
-    // production path)
-    lastChunkInputPlanThunk = () => ranged.queryExecution.executedPlan.toString
-    val parted = ranged
-      .localCheckpoint(false)
+    val parted = Scoped
+      .checkpoint(ticks.repartitionByRange(col("tkr"), col("day"), col("seq")))
       .withColumn("_pid", spark_partition_id())
     val wChunk = Window.partitionBy("tkr", "day", "_pid").orderBy("seq")
     val local = parted

@@ -35,8 +35,12 @@ object Silver {
       "per-(ticker,day) OHLCV bars from lineitem-priced events — the gold" +
         " daily table every feature/indicator query starts from",
       Seq("q18", "q19", "q20", "q21", "q22", "q23", "q24", "q25", "q33",
-        "q73", "q97", "q102", "q122",
-        "q80", "q81", "q82", "q83", "q153", "q154", "q155", "q176"),
+        "q73", "q97", "q102",
+        "q80", "q81", "q82", "q83", "q154", "q155", "q176",
+        "q218", "q222", "q223", "q231", "q236", "q240", "q241", "q248",
+        "q249", "q272", "q274", "q278", "q279", "q282", "q283", "q293",
+        "q294", "q295", "q299",
+        "via triple_barrier_labels: q219, q220, q221"),
       (s, d) => WindowFeatures.bars(s, d)),
     SilverTable(
       "bars_global_rn",
@@ -51,20 +55,20 @@ object Silver {
         " family",
       Seq("q35", "q61", "q114", "q131", "q151", "q160", "q167", "q168",
         "q170", "q201", "q205", "via clusterLabels: q72", "q175", "q195",
-        "q200"),
+        "q200", "q286", "q319"),
       (s, d) => Dedup.nearDupPairs(s, d)),
     SilverTable(
       "word3grams",
       "df-annotated distinct word 3-grams per doc — the shared candidate" +
         " generator of the gram similarity family",
-      Seq("q37", "q96", "q163", "q174", "q205", "q232"),
+      Seq("q37", "q96", "q163", "q174", "q205", "q232", "q264"),
       (s, d) => Dedup.word3grams(s, d)),
     SilverTable(
       "kmeans_cents",
       "trained k-means codebook (cid, coords), k = clamp(C*ceil(sqrt n)," +
         " MinK, MaxK) — model state consumed by cluster stats, the IVF" +
         " index and SemDeDup",
-      Seq("q98", "via cellRanked: q105", "q108", "q162"),
+      Seq("q98", "via cellRanked: q105", "q108", "q258", "q312"),
       (s, d) => Corpus.kmeansCentroids(s, d, Corpus.KmIters)),
     SilverTable(
       "pq_codebooks",
@@ -77,14 +81,14 @@ object Silver {
       "per-(ticker, entry day) triple-barrier outcome (label, days to" +
         " event, cents) — the financial-ML label table q219 reports and" +
         " meta-labels/uniqueness weights consume",
-      Seq("q219", "q220", "q221"),
+      Seq("q219", "q220", "q221", "q272"),
       (s, d) => WindowFeatures.tripleBarrier(s, d)),
     SilverTable(
       "lm_doc_bits",
       "per-doc exact integer bits-per-bigram under the reference-slice" +
         " bigram LM (+ milli bits/token) — the scored table the LM filter" +
         " reports on and the CCNet buckets cut",
-      Seq("q120", "q207"),
+      Seq("q120", "q207", "q259", "q263"),
       (s, d) => Search.lmAllDocs(s, d)),
     SilverTable(
       "textrank_edges",
@@ -156,7 +160,9 @@ object Silver {
       "per-(ticker, month) last fill price in exact cents (same unique" +
         " seq order as daily_bars) — the cross-section grain the alpha" +
         " research family ranks and backtests on",
-      Seq("q246", "q247", "q250", "q252"),
+      Seq("q246", "q247", "q250", "q252", "q254", "q255", "q256", "q260",
+        "q262", "q266", "q269", "q280", "q289", "q291", "q297", "q298",
+        "q300", "q305", "q306", "q307", "q310", "q313", "q323"),
       (s, d) => CrossSection.mbars(s, d)),
     SilverTable(
       "classified_flow",
@@ -180,16 +186,18 @@ object Silver {
       "the session model store: (model_name, artifact bytes) parquet" +
         " rows; every load re-reads serialized bytes through the storage" +
         " boundary",
-      Seq("q102", "q113", "q130"),
+      Seq("q102", "q113"),
       (s, _) => graft.functions.GbtArtifact.store(s)))
 
   def names: Seq[String] = tables.map(_.name)
 
-  /** Whether a runtime Scoped.shared key (e.g. "kmeans_cents_5:/dir")
-    * belongs to a declared silver table.
+  /** The declared silver table a runtime Scoped.shared key (e.g.
+    * "kmeans_cents_5:/dir") belongs to.
     */
-  def covers(key: String): Boolean = {
+  def tableOf(key: String): Option[SilverTable] = {
     val slug = key.takeWhile(_ != ':')
-    tables.exists(t => slug == t.name || slug.startsWith(t.name + "_"))
+    tables.find(t => slug == t.name || slug.startsWith(t.name + "_"))
   }
+
+  def covers(key: String): Boolean = tableOf(key).nonEmpty
 }

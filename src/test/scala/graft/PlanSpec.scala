@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Scoped
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,6 +16,19 @@ class PlanSpec extends AnyFunSuite {
   private def planOf(name: String): String = {
     val df = SparkEntry.queries(name)(spark, TestSpark.Sf001)
     df.queryExecution.executedPlan.toString
+  }
+
+  /** Pre-write plan of the one materialize barrier a query's own builder
+    * reaches — the plan the FileScan boundary would otherwise hide.
+    * Barriers inside a shared table the build happens to trigger depend
+    * on what ran before and are not the query's; a second barrier of the
+    * query's own fails here rather than leaving the assertion to pick one.
+    */
+  private def materializedPlanOf(name: String): String = {
+    val (_, barriers) =
+      Scoped.capture(SparkEntry.queries(name)(spark, TestSpark.Sf001))
+    val Seq(own) = barriers.filter(b => b.kind == "materialize" && b.in.isEmpty)
+    own.input.get.executedPlan.toString
   }
 
   test("q10: filters push down into the parquet scan") {
@@ -225,9 +239,9 @@ class PlanSpec extends AnyFunSuite {
       !p.contains("BroadcastNestedLoopJoin"), p.take(1200))
     // the occurrence count groups on the md5 gram hash, not the gram
     // text; since r14 the position table is materialized once, so the
-    // explode lives in the BUILD plan behind the materialize boundary
+    // explode lives in the BUILD plan behind that materialize boundary
     // (the q22/q177 discipline)
-    val b = graft.operators.Scoped.lastMaterializedPlan
+    val b = materializedPlanOf("q118_substring_dedup")
     assert(b.contains("Generate posexplode"), b.take(800))
   }
 
@@ -395,10 +409,9 @@ class PlanSpec extends AnyFunSuite {
     // asserts the physical operator actually appears for the two shapes
     // that rely on it: latest-per-key (q08) and grouped top-k (q39).
     Seq("q08_latest_per_key", "q39_knn_brute").foreach { q =>
-      val df = SparkEntry.queries(q)(spark, TestSpark.Sf001)
       val p =
-        if (q == "q39_knn_brute") graft.operators.Scoped.lastMaterializedPlan
-        else df.queryExecution.executedPlan.toString
+        if (q == "q39_knn_brute") materializedPlanOf(q)
+        else planOf(q)
       assert(p.contains("WindowGroupLimit"),
         s"$q lost its group-limit prune:\n" + p.linesIterator.take(25).mkString("\n"))
     }
@@ -409,8 +422,7 @@ class PlanSpec extends AnyFunSuite {
     // JOIN instead of collect_set OVER (PARTITION BY ckey), so no task
     // ever buffers a whole duplicate group — the attach join may shuffle
     // (skew-splittable), a window may not
-    SparkEntry.queries("q164_unicode_cleanup")(spark, TestSpark.Sf001)
-    val p = graft.operators.Scoped.lastMaterializedPlan
+    val p = materializedPlanOf("q164_unicode_cleanup")
     assert(!p.contains("Window"), "q164 re-grew a dup-group window:\n" +
       p.linesIterator.take(30).mkString("\n"))
     assert(!p.contains("CartesianProduct"), p)
@@ -446,8 +458,7 @@ class PlanSpec extends AnyFunSuite {
     // materialized since r9 (pool'd RRF): pre-write plan still carries
     // the broadcast df/corpus joins, and each ranker's rank window must
     // sit above a TakeOrdered/Limit pool cut, never the raw matched set
-    SparkEntry.queries("q177_rrf_hybrid")(spark, TestSpark.Sf001)
-    val p = graft.operators.Scoped.lastMaterializedPlan
+    val p = materializedPlanOf("q177_rrf_hybrid")
     assert(!p.contains("CartesianProduct"))
     assert(p.contains("BroadcastHashJoin"), p)
     assert(p.contains("TakeOrderedAndProject"),
@@ -498,15 +509,6 @@ class PlanSpec extends AnyFunSuite {
     // the running-sum window must be keyed (hashpartitioning on day),
     // not a single-partition global window (Exchange SinglePartition)
     assert(p.contains("hashpartitioning(day"), p.linesIterator.take(30).mkString("\n"))
-  }
-
-  /** Plan of a query whose last step is Scoped.materialize: running the
-    * builder triggers the write, and the hook holds the pre-write plan
-    * the FileScan boundary would otherwise hide.
-    */
-  private def materializedPlanOf(name: String): String = {
-    SparkEntry.queries(name)(spark, TestSpark.Sf001)
-    graft.operators.Scoped.lastMaterializedPlan
   }
 
   test("q204: PQ codes and ADC LUT join broadcast — the corpus never shuffles by distance") {

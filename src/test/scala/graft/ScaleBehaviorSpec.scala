@@ -244,7 +244,7 @@ class ScaleBehaviorSpec extends AnyFunSuite {
   }
 
   test("hot symbol-day tick tape: chunk windows bounded; chunked flow == naive global window") {
-    import graft.operators.Series
+    import graft.operators.{Scoped, Series}
     // a deliberately hyper-liquid symbol-day the fixtures can't produce:
     // one (tkr, day) owns 50k of 61k ticks — the tape shape that made
     // the pre-r10 per-(tkr, day) window serial at 100 TB scale (the r9
@@ -281,7 +281,7 @@ class ScaleBehaviorSpec extends AnyFunSuite {
       // (a) the chunking law: no running-state window partition — a
       // (tkr, day, _pid) cell — holds more than a balanced share, and
       // the hot symbol-day REALLY splits across chunks
-      val flow = Series.flowFromTape(tape)
+      val (flow, barriers) = Scoped.capture(Series.flowFromTape(tape))
       val cells = flow.groupBy($"tkr", $"day", $"_pid")
         .agg(count(lit(1)).as("rows")).collect()
       val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -319,8 +319,10 @@ class ScaleBehaviorSpec extends AnyFunSuite {
       val plan = flow.queryExecution.executedPlan.toString
       assert(plan.contains("Scan ExistingRDD"),
         plan.linesIterator.take(30).mkString("\n"))
-      assert(Series.lastChunkInputPlan.contains("rangepartitioning"),
-        Series.lastChunkInputPlan.linesIterator.take(30).mkString("\n"))
+      val Seq(chunkInput) = barriers.filter(_.kind == "checkpoint")
+        .map(_.input.get.executedPlan.toString)
+      assert(chunkInput.contains("rangepartitioning"),
+        chunkInput.linesIterator.take(30).mkString("\n"))
     } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)

@@ -1,8 +1,7 @@
 package graft.plans
 
 import graft.{SparkEntry, TestSpark}
-import graft.operators.{Scoped, Silver}
-import org.apache.spark.sql.DataFrame
+import graft.operators.Silver
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeSet, BinaryComparison, EqualNullSafe, EqualTo, Expression, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.{ExistenceJoin, LeftAnti, LeftSemi}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -230,28 +229,17 @@ class JoinFanoutSpec extends AnyFunSuite with PredicateHelper {
     plan.collectWithSubqueries { case j: Join => classify(j) }.flatten
 
   test("every multiplying join across the full query surface is declared bounded") {
-    val builders: Seq[(String, () => DataFrame)] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
-        n -> (() => fn(spark, TestSpark.Sf001))
-      } ++ Silver.tables.map(t =>
-        s"silver:${t.name}" -> (() => t.build(spark, TestSpark.Sf001)))
-
     val undeclared = mutable.SortedMap.empty[String, mutable.ListBuffer[Hazard]]
     val keyMismatch = mutable.ListBuffer.empty[String]
     val buildErrors = mutable.ListBuffer.empty[String]
     val hazardQueries = mutable.SortedSet.empty[String]
 
-    // rebuild shared silvers under the audit hook so pre-materialization
-    // plans (where the pair joins live) are walked too — the
-    // WindowBoundsSpec discipline
-    Scoped.invalidate()
-    builders.foreach { case (name, mk) =>
-      try {
-        val audited = mutable.ListBuffer.empty[LogicalPlan]
-        Scoped.planAudit = Some(p => audited.synchronized { audited += p })
-        val top = try mk().queryExecution.optimizedPlan
-          finally Scoped.planAudit = None
-        val hs = (audited.toList :+ top).flatMap(hazards)
+    // pre-materialization plans (where the pair joins live) are walked
+    // too — the census's WindowBoundsSpec order: queries, then silvers
+    PlanCensus.attributed(PlanCensus.queriesFirst).foreach {
+      case (name, Left(err)) => buildErrors += s"$name: $err"
+      case (name, Right(plans)) =>
+        val hs = plans.flatMap(hazards)
         if (hs.nonEmpty) {
           hazardQueries += name
           val sites = JoinFanoutBounds.sitesFor(name)
@@ -269,9 +257,6 @@ class JoinFanoutSpec extends AnyFunSuite with PredicateHelper {
             }
           }
         }
-      } catch {
-        case e: Throwable => buildErrors += s"$name: ${e.getMessage}"
-      }
     }
 
     assert(buildErrors.isEmpty,

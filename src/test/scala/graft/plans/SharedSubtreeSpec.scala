@@ -1,7 +1,5 @@
 package graft.plans
 
-import graft.{SparkEntry, TestSpark}
-import graft.operators.{Scoped, Silver}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,7 +15,6 @@ import scala.collection.mutable
   * this audit does. See [[SharedSubtrees]] for the allowlist contract.
   */
 class SharedSubtreeSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
 
   /** Base FACT tables — the scans worth guarding. Dimension tables
     * (region/nation/supplier/customer/part) are cheap to re-scan by
@@ -55,34 +52,21 @@ class SharedSubtreeSpec extends AnyFunSuite {
     }.flatten
 
   test("no two top-level builds plan the same canonical fact-scanning aggregate") {
-    // silver builds walk FIRST so a shared subtree attributes to its
+    // fingerprint -> (signature, owning builds); mid-query materialize
+    // boundaries are walked too (their pre-write plans hide aggregates).
+    // Silver builds walk FIRST so a shared subtree attributes to its
     // declared owner, then every query (which, consuming the silver
     // parquet, must NOT re-plan the build's aggregates structurally)
-    val builders: Seq[(String, () => LogicalPlan)] =
-      Silver.tables.map(t => s"silver:${t.name}" ->
-        (() => t.build(spark, TestSpark.Sf001).queryExecution.optimizedPlan)) ++
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
-        n -> (() => fn(spark, TestSpark.Sf001).queryExecution.optimizedPlan)
-      }
-
-    // fingerprint -> (signature, owning builds); mid-query materialize
-    // boundaries are walked too (their pre-write plans hide aggregates)
     val owners = mutable.Map.empty[String, (String, mutable.SortedSet[String])]
     val buildErrors = mutable.ListBuffer.empty[String]
-    Scoped.invalidate()
-    builders.foreach { case (name, mk) =>
-      try {
-        val audited = mutable.ListBuffer.empty[LogicalPlan]
-        Scoped.planAudit = Some(p => audited.synchronized { audited += p })
-        val top = try mk() finally Scoped.planAudit = None
-        (audited.toList :+ top).flatMap(heavyAggs).foreach {
+    PlanCensus.attributed(PlanCensus.silversFirst).foreach {
+      case (name, Left(err)) => buildErrors += s"$name: $err"
+      case (name, Right(plans)) =>
+        plans.flatMap(heavyAggs).foreach {
           case (fp, sig) =>
             owners.getOrElseUpdate(fp, (sig, mutable.SortedSet.empty[String]))
               ._2 += name
         }
-      } catch {
-        case e: Throwable => buildErrors += s"$name: ${e.getMessage}"
-      }
     }
     assert(buildErrors.isEmpty,
       s"builds failed:\n  ${buildErrors.mkString("\n  ")}")

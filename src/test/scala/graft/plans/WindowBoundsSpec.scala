@@ -1,8 +1,6 @@
 package graft.plans
 
-import graft.{SparkEntry, TestSpark}
-import graft.operators.{Scoped, Silver}
-import org.apache.spark.sql.DataFrame
+import graft.TestSpark
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Expression, ExprId}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window => LWindow, WindowGroupLimit}
 import org.scalatest.funsuite.AnyFunSuite
@@ -94,13 +92,6 @@ class WindowBoundsSpec extends AnyFunSuite {
   }
 
   test("every window partition key set across the full query surface is declared bounded") {
-    // name -> builder, over BOTH registries the engine plans windows in
-    val builders: Seq[(String, () => DataFrame)] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (n, fn) =>
-        n -> (() => fn(spark, TestSpark.Sf001))
-      } ++ Silver.tables.map(t =>
-        s"silver:${t.name}" -> (() => t.build(spark, TestSpark.Sf001)))
-
     val undeclared = mutable.SortedMap.empty[String, mutable.SortedSet[String]]
     val unexemptGlobal = mutable.SortedSet.empty[String]
     val tickerNoEvidence = mutable.SortedSet.empty[String]
@@ -108,16 +99,16 @@ class WindowBoundsSpec extends AnyFunSuite {
 
     // the parquet boundary in Scoped.materialize / Scoped.shared hides
     // pre-write plans behind a FileScan — and that is where most windows
-    // live. Rebuild every shared table under the audit hook so their
-    // plans (and every materialize input's) are walked too.
-    Scoped.invalidate()
-    builders.foreach { case (name, mk) =>
-      try {
-        val audited = mutable.ListBuffer.empty[LogicalPlan]
-        Scoped.planAudit = Some(p => audited.synchronized { audited += p })
-        val top = try mk().queryExecution.optimizedPlan
-          finally Scoped.planAudit = None
-        (audited.toList :+ top).flatMap(windowKeySets).foreach {
+    // live. The census holds those plans (every materialize input's and
+    // every shared build's) next to each build's top plan; queries walk
+    // first, in name order, then the silver builds.
+    PlanCensus.attributed(PlanCensus.queriesFirst).foreach {
+      // a query that cannot BUILD is a correctness-gate problem, not a
+      // window-bound problem — record it so this spec still reports
+      // the full undeclared listing instead of dying on the first one
+      case (name, Left(err)) => buildErrors += s"$name: $err"
+      case (name, Right(plans)) =>
+        plans.flatMap(windowKeySets).foreach {
           case (keys, w) =>
             if (keys.isEmpty) {
               if (!WindowBounds.globalWindowExempt.contains(name))
@@ -133,12 +124,6 @@ class WindowBoundsSpec extends AnyFunSuite {
               tickerNoEvidence += name
             }
         }
-      } catch {
-        // a query that cannot BUILD is a correctness-gate problem, not a
-        // window-bound problem — record it so this spec still reports
-        // the full undeclared listing instead of dying on the first one
-        case e: Throwable => buildErrors += s"$name: ${e.getMessage}"
-      }
     }
 
     assert(buildErrors.isEmpty, s"query builds failed:\n  ${buildErrors.mkString("\n  ")}")
