@@ -525,7 +525,6 @@ object Corpus extends QueryModule {
         .filter($"n" > 0)
       val parted = toks.repartitionByRange($"doc_id")
         .withColumn("_pid", spark_partition_id())
-        .persist()
       val offsets = parted.groupBy($"_pid").agg(sum($"n").as("_cnt"))
         .withColumn("_offset",
           coalesce(sum($"_cnt").over(
@@ -548,7 +547,7 @@ object Corpus extends QueryModule {
             greatest($"pack_id" * CtxLen, $"off")).as("n_tokens"),
           min($"doc_id").as("first_doc"),
           max($"doc_id").as("last_doc"))
-      Scoped.materialize(parted)(packs).orderBy($"pack_id")
+      packs.orderBy($"pack_id")
     },
     Some(s"""
       WITH toks AS (
@@ -605,7 +604,6 @@ object Corpus extends QueryModule {
       val parted = toks
         .repartitionByRange($"bucket_cap", $"tokens".desc, $"doc_id")
         .withColumn("_pid", spark_partition_id())
-        .persist()
       val offsets = parted.groupBy($"_pid", $"bucket_cap")
         .agg(count(lit(1)).as("_cnt"))
         .withColumn("_offset",
@@ -629,7 +627,7 @@ object Corpus extends QueryModule {
           expr("(1000 * sum_tokens) div (n_docs * bucket_cap)"))
         .withColumn("eff_dyn_milli",
           expr("(1000 * sum_tokens) div (n_docs * greatest(batch_max_tokens, 1L))"))
-      Scoped.materialize(parted)(batched).orderBy($"bucket_cap", $"batch_no")
+      batched.orderBy($"bucket_cap", $"batch_no")
     },
     Some(s"""
       WITH toks AS (
@@ -683,7 +681,6 @@ object Corpus extends QueryModule {
         .select($"doc_id", Portable.md5Hash64($"t").as("th"))
         .crossJoin(broadcast(bounds))
         .withColumn("decile", expr("(doc_id * 10) div n_ids"))
-        .persist()
       val occ = toks.groupBy($"decile").agg(count(lit(1)).as("n_occurrences"))
       val firstSeen = toks.groupBy($"th").agg(min($"decile").as("first_decile"))
       val newTypes = firstSeen.groupBy($"first_decile".as("decile"))
@@ -696,7 +693,7 @@ object Corpus extends QueryModule {
         .withColumn("occ_cum", sum($"n_occurrences").over(w))
         .withColumn("type_token_milli",
           expr("(1000 * vocab_cum) div occ_cum"))
-      Scoped.materialize(toks)(out).orderBy($"decile")
+      out.orderBy($"decile")
     },
     Some(s"""
       WITH n AS (SELECT max(doc_id) + 1 AS n_ids FROM documents),
@@ -769,7 +766,6 @@ object Corpus extends QueryModule {
         .withColumn("decile", expr("(doc_id * 10) div n_ids"))
       val gcounts = grams.groupBy($"gh", $"decile")
         .agg(count(lit(1)).as("cnt"))
-        .persist() // vocab×deciles-bounded; three cheap consumers below
       val occ = gcounts.groupBy($"decile").agg(sum($"cnt").as("n_grams"))
       // per gram: first decile and the instance count AT that decile, in
       // one pass (min over ≤ 10 rows per gram)
@@ -784,7 +780,7 @@ object Corpus extends QueryModule {
         .na.fill(0L, Seq("n_first_decile_instances", "n_new_grams"))
         .withColumn("novelty_milli",
           expr("(1000 * n_first_decile_instances) div n_grams"))
-      Scoped.materialize(gcounts)(out).orderBy($"decile")
+      out.orderBy($"decile")
     },
     Some(s"""
       WITH n AS (SELECT max(doc_id) + 1 AS n_ids FROM documents),

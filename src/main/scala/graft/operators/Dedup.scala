@@ -223,8 +223,7 @@ object Dedup extends QueryModule {
             sum(when(shiftright($"h", b).bitwiseAND(lit(1L)) === 1L, 1L).otherwise(-1L)).as(s"s$b")): _*)
       val fp = (0 until SimBits).map(b =>
         when(col(s"s$b") > 0, lit(1L << b)).otherwise(lit(0L))).reduce(_ + _)
-      // band-exploded below — materialize the signature table once
-      val sigs = bitSums.select($"doc_id", $"lang", fp.as("fp")).persist()
+      val sigs = bitSums.select($"doc_id", $"lang", fp.as("fp"))
       // Candidate generation joins on (lang, band, band bits), never on
       // the language block alone: at corpus scale "lang = en" is most of
       // the data and a lang-only self-join is O(n²) inside that block,
@@ -247,7 +246,7 @@ object Dedup extends QueryModule {
         .withColumn("hamming", bit_count($"fa".bitwiseXOR($"fb")))
         .filter($"hamming" <= SimHammingMax)
         .select($"lang", $"i", $"j", $"hamming")
-      Scoped.materialize(sigs)(pairs).orderBy($"lang", $"i", $"j")
+      pairs.orderBy($"lang", $"i", $"j")
     },
     Some {
       val sums = (0 until SimBits).map(b =>
@@ -440,14 +439,12 @@ object Dedup extends QueryModule {
             col("a.hs") === col("b.hs") && col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
         .distinct()
-      // r14 (guide §3.1/§2.4): `sizes` fed both verify legs as two
-      // lineage copies (the full groupBy ran twice), and both verify
-      // joins BROADCAST the full grams table (single-threaded
-      // HashedRelation builds of the corpus side — the q232 disease,
-      // same plan shape). Materialize sizes once; shuffled hash joins
-      // stream the candidate explosion over parallel exchanges.
-      val sizes = Scoped.materialize()(
-        grams.groupBy($"doc_id").agg(count(lit(1)).as("n")))
+      // r14 (guide §3.1): both verify joins BROADCAST the full grams
+      // table (single-threaded HashedRelation builds of the corpus side
+      // — the q232 disease, same plan shape); shuffled hash joins stream
+      // the candidate explosion over parallel exchanges. `sizes` feeds
+      // both verify legs, and exchange reuse runs its groupBy once.
+      val sizes = grams.groupBy($"doc_id").agg(count(lit(1)).as("n"))
       val inter = cands
         .join(grams.as("a").hint("shuffle_hash"), col("a.doc_id") === $"i")
         .join(grams.as("b").hint("shuffle_hash"),
@@ -586,7 +583,6 @@ object Dedup extends QueryModule {
       import spark.implicits._
       val emb = Tables.embeddings(spark, dir)
         .withColumn("nrm", VectorOps.normScaled($"embedding"))
-        .persist() // both sides of the blocked self-join
       val pairs = emb.as("a").join(emb.as("b"),
           col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
         .withColumn("cos", VectorOps.cosineFromScaled(
@@ -595,7 +591,7 @@ object Dedup extends QueryModule {
         .filter($"cos" >= 0.4)
         .select(col("a.label").as("label"), col("a.vec_id").as("i"),
           col("b.vec_id").as("j"), $"cos")
-      Scoped.materialize(emb)(pairs).orderBy($"label", $"i", $"j")
+      pairs.orderBy($"label", $"i", $"j")
     },
     Some(s"""
       WITH emb AS (
@@ -1509,13 +1505,13 @@ object Dedup extends QueryModule {
       // shingles — a multi-million-row HashedRelation whose build was
       // the query's single largest job (1.85 s, single-threaded) when
       // keyed by the 5-char shingle STRING. Keying both sides on the
-      // 8-byte md5 of the shingle (computed once into the persisted
-      // tape) lets Spark build its specialized long-keyed relation —
-      // identical intersection counts (oracle-gated, the q191/q232
-      // hash-key discipline).
+      // 8-byte md5 of the shingle lets Spark build its specialized
+      // long-keyed relation — identical intersection counts
+      // (oracle-gated, the q191/q232 hash-key discipline). The three
+      // readers of the doc-partitioned tape share one exchange (reuse).
       val sh = shingles(spark, dir)
         .select($"doc_id", Portable.md5Hash64($"s").as("hs"))
-        .repartition(col("doc_id")).persist()
+        .repartition(col("doc_id"))
       val sizes = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
       val qsh = sh
         .filter(Portable.md5Hash64(
@@ -1538,11 +1534,11 @@ object Dedup extends QueryModule {
       val found = lsh.select($"i".as("q_id"), $"j".as("d_id"))
         .unionAll(lsh.select($"j".as("q_id"), $"i".as("d_id")))
         .withColumn("f", lit(1L))
-      Scoped.materialize(sh)(truth.join(found, Seq("q_id", "d_id"), "left")
+      truth.join(found, Seq("q_id", "d_id"), "left")
         .groupBy($"q_id")
         .agg(count(lit(1)).as("n_true"),
           sum(coalesce($"f", lit(0L))).as("n_found"))
-        .withColumn("recall_milli", expr("(1000 * n_found) div n_true")))
+        .withColumn("recall_milli", expr("(1000 * n_found) div n_true"))
         .orderBy($"q_id")
     },
     Some(s"""

@@ -80,14 +80,13 @@ object Graph extends QueryModule {
   private[operators] def pageRank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val edges = Dedup.nearDupPairs(spark, dir).select($"i", $"j").distinct()
-    // r14 (guide §2.4): sym feeds every unrolled round's edge join and
-    // deg; deg feeds every round + the final projection — as lineage
-    // copies the pair-table scan + distinct re-planned ~8× (210
-    // Exchanges in q160's before-plan). Materialize the edge-scale sym
-    // and node-scale deg once; each round then plans two FileScans.
-    val sym = Scoped.materialize()(
-      edges.select($"i".as("src"), $"j".as("dst"))
-        .unionAll(edges.select($"j".as("src"), $"i".as("dst"))))
+    // r14 (guide §2.4): deg feeds every round + the final projection —
+    // as lineage copies the pair-table scan + distinct re-planned ~8×
+    // (210 Exchanges in q160's before-plan). Materialize the node-scale
+    // deg once; the edge-scale sym stays inline (measured faster than
+    // its barrier, plans/barrier_audit.md).
+    val sym = edges.select($"i".as("src"), $"j".as("dst"))
+      .unionAll(edges.select($"j".as("src"), $"i".as("dst")))
     val deg = Scoped.materialize()(sym.groupBy($"src".as("node"))
       .agg(count(lit(1)).as("degree")))
     val r0 = deg.select($"node", lit(SeedMass).as("r"))
@@ -571,8 +570,7 @@ object Graph extends QueryModule {
       // fed sym ×2, the anti-join and — through sym — both wedge legs
       // and deg: ~7 lineage copies, each re-executing the self-join
       // (the before-plan repeats the subtree ten times). Materialize
-      // edges and the |nodes|-row deg table once; the oracle already
-      // declares both MATERIALIZED.
+      // edges once; the oracle already declares it MATERIALIZED.
       val edges = Scoped.materialize()(li.select($"ok", $"pk".as("i"))
         .join(li.select($"ok".as("ok2"), $"pk".as("j")),
           $"ok" === $"ok2" && $"i" < $"j")
@@ -582,8 +580,8 @@ object Graph extends QueryModule {
         .select($"i", $"j"))
       val sym = edges.select($"i".as("src"), $"j".as("dst"))
         .unionAll(edges.select($"j".as("src"), $"i".as("dst")))
-      val deg = Scoped.materialize()(sym.groupBy($"src".as("node"))
-        .agg(count(lit(1)).as("degree")))
+      val deg = sym.groupBy($"src".as("node"))
+        .agg(count(lit(1)).as("degree"))
       val e1 = sym.select($"src".as("w"), $"dst".as("a"))
       val e2 = sym.select($"src".as("w2"), $"dst".as("b"))
       val wedges = e1.join(e2, $"w" === $"w2" && $"a" < $"b")

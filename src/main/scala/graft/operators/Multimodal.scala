@@ -757,7 +757,6 @@ object Multimodal extends QueryModule {
         .select($"doc_id").as[Long]
         .mapPartitions(_.map(id => (id, phash64(synthPhashBmp(id)))))
         .toDF("doc_id", "h")
-        .persist()
       val bandCols = (0 until PhBands).map(b =>
         struct(lit(b).as("band"),
           shiftright($"h", b * PhBandBits)
@@ -774,7 +773,7 @@ object Multimodal extends QueryModule {
         .withColumn("hamming", expr("bit_count(ha ^ hb)").cast("long"))
         .filter($"hamming" <= PhHamMax)
         .select($"i", $"j", $"hamming")
-      Scoped.materialize(hashes)(pairs).orderBy($"i", $"j")
+      pairs.orderBy($"i", $"j")
     },
     Some {
       val cosLit = (0 until PhN * PhN).map { i =>

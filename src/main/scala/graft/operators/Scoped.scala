@@ -63,15 +63,19 @@ private[graft] object Scoped {
 
   /** One barrier reached inside [[capture]]:
     *   - `kind`: "materialize", "shared" (a build), "shared-hit" (a cached
-    *     read) or "checkpoint";
+    *     read), "checkpoint", or "stream" (a finished streaming run, see
+    *     [[stream]]);
     *   - `key`: the shared key, for the two shared kinds;
     *   - `in`: the key of the shared build this barrier ran inside, if any;
     *   - `input`: the barrier input's QueryExecution, planned before the
-    *     barrier wrote or released anything (a shared-hit plans nothing).
+    *     barrier wrote or released anything (a shared-hit or a stream plans
+    *     nothing);
+    *   - `stateRows`: for a stream, Σ numRowsTotal over its stateful
+    *     operators at the last progress (−1 when none was recorded).
     */
   final case class Barrier(
       kind: String, key: Option[String], in: Option[String],
-      input: Option[QueryExecution])
+      input: Option[QueryExecution], stateRows: Option[Long] = None)
 
   private final class Recorder {
     val barriers = scala.collection.mutable.ListBuffer.empty[Barrier]
@@ -95,11 +99,13 @@ private[graft] object Scoped {
   }
 
   private def reached(
-      kind: String, key: Option[String], input: Option[DataFrame]): Unit =
+      kind: String, key: Option[String], input: Option[DataFrame],
+      stateRows: Option[Long] = None): Unit =
     Option(recorder.get).foreach { r =>
       val qe = input.map(_.queryExecution)
       qe.foreach(_.executedPlan) // plan now, while persisted inputs are cached
-      r.synchronized(r.barriers += Barrier(kind, key, r.open.headOption, qe))
+      r.synchronized(
+        r.barriers += Barrier(kind, key, r.open.headOption, qe, stateRows))
     }
 
   private def building[T](key: String)(body: => T): T =
@@ -110,6 +116,13 @@ private[graft] object Scoped {
         try body finally r.synchronized(r.open = r.open.tail)
     }
 
+  /** Writes `result` to a temp parquet, unpersists `persisted` and returns
+    * the re-read. A call site keeps its barrier only if it is the sole
+    * release point of persisted per-round frames, pins a non-deterministic
+    * input read twice, or its removal measurably costs time at sf0.1 or
+    * shows the plan registries an undeclared plan (plans/barrier_audit.md
+    * holds the rule and every site's numbers).
+    */
   def materialize(persisted: DataFrame*)(result: DataFrame): DataFrame = {
     val spark = result.sparkSession
     reached("materialize", None, Some(result))
@@ -118,6 +131,12 @@ private[graft] object Scoped {
     persisted.foreach(_.unpersist())
     spark.read.parquet(out)
   }
+
+  /** Records a finished streaming run inside [[capture]]: a "stream"
+    * entry with no input plan carrying the run's final state-row census.
+    */
+  def stream(stateRows: Long): Unit =
+    reached("stream", None, None, Some(stateRows))
 
   /** Localcheckpoint barrier (lazy): pins `df`'s partitioning for the
     * callers that consume it twice. Inside [[capture]] it records the

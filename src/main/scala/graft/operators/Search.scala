@@ -465,7 +465,7 @@ object Search extends QueryModule {
     (spark, dir) => {
       import spark.implicits._
       val w = org.apache.spark.sql.expressions.Window
-      val docs = lmAllDocs(spark, dir).filter($"n_big" > 0).persist()
+      val docs = lmAllDocs(spark, dir).filter($"n_big" > 0)
       val hist = docs.groupBy($"source", $"milli").agg(count(lit(1)).as("c"))
       val wH = w.partitionBy($"source").orderBy($"milli".asc)
         .rowsBetween(w.unboundedPreceding, w.currentRow)
@@ -488,7 +488,7 @@ object Search extends QueryModule {
           sum($"milli").as("sum_milli"),
           min($"milli").as("min_milli"),
           max($"milli").as("max_milli"))
-      Scoped.materialize(docs)(out).orderBy($"source", $"bucket")
+      out.orderBy($"source", $"bucket")
     },
     Some(s"""
       WITH $lmAllDocsCtes,
@@ -1197,7 +1197,7 @@ object Search extends QueryModule {
       // the shared gram silver table; lang/lb/block-df prune at the scan,
       // global gram df is this operator's own aggregate
       val grams = Dedup.word3grams(spark, dir).select($"doc_id", $"s")
-      val docLen = grams.groupBy($"doc_id").agg(count(lit(1)).as("dl")).persist()
+      val docLen = grams.groupBy($"doc_id").agg(count(lit(1)).as("dl"))
       val corpus = docLen.agg(
         sum($"dl").as("sum_dl"), count(lit(1)).as("n_docs"))
       val dfx = grams.groupBy($"s").agg(count(lit(1)).as("df"))
@@ -1237,7 +1237,7 @@ object Search extends QueryModule {
         .filter($"rank" <= NegK)
         .select($"anchor_id", $"rank", $"doc_id".as("neg_id"), $"score",
           $"n_shared_grams")
-      Scoped.materialize(docLen)(out).orderBy($"anchor_id", $"rank")
+      out.orderBy($"anchor_id", $"rank")
     },
     Some(s"""
       WITH toksn AS (

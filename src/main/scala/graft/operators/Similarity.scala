@@ -39,7 +39,6 @@ object Similarity extends QueryModule {
       import spark.implicits._
       val emb = Tables.embeddings(spark, dir)
         .withColumn("nrm", VectorOps.normScaled($"embedding"))
-        .persist() // corpus side + query side come from one materialization
       val queries = emb.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("q_id"), $"embedding".as("q_emb"), $"nrm".as("q_nrm"))
       val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id".asc)
@@ -49,7 +48,7 @@ object Similarity extends QueryModule {
         .withColumn("rank", row_number().over(w))
         .filter($"rank" <= K)
         .select($"q_id", $"rank", $"vec_id", $"cos")
-      Scoped.materialize(emb)(topk).orderBy($"q_id", $"rank")
+      topk.orderBy($"q_id", $"rank")
     },
     Some(s"""
       WITH emb AS (
@@ -188,7 +187,6 @@ object Similarity extends QueryModule {
       import spark.implicits._
       val emb = Tables.embeddings(spark, dir)
         .withColumn("nrm", VectorOps.normScaled($"embedding"))
-        .persist()
       val cent = emb.filter($"vec_id" < NumCells)
         .select($"vec_id".as("cent_id"), $"embedding".as("c_emb"), $"nrm".as("c_nrm"))
       val scored = emb.join(broadcast(cent))
@@ -199,7 +197,6 @@ object Similarity extends QueryModule {
         .withColumn("rn", row_number().over(wAssign))
         .filter($"rn" === 1)
         .select($"vec_id", $"embedding", $"nrm", $"cent_id".as("cell"))
-        .persist()
       val probes = scored.filter($"vec_id" < NumQueries)
         .withColumn("rn", row_number().over(wAssign))
         .filter($"rn" <= NumProbes)
@@ -213,7 +210,7 @@ object Similarity extends QueryModule {
         .withColumn("rank", row_number().over(wRank))
         .filter($"rank" <= K)
         .select($"q_id", $"rank", $"vec_id", $"cos")
-      Scoped.materialize(emb, assign)(topk).orderBy($"q_id", $"rank")
+      topk.orderBy($"q_id", $"rank")
     },
     Some(s"""
       WITH emb AS (
@@ -803,7 +800,7 @@ object Similarity extends QueryModule {
     "q204_pq_adc_search",
     (spark, dir) => {
       import spark.implicits._
-      val emb = Corpus.embScaled(spark, dir).persist()
+      val emb = Corpus.embScaled(spark, dir)
       val cb = pqCodebooks(spark, dir)
       // encode: per subspace, nearest codebook entry (ties on cid)
       val codes = (0 until PqM).map { m =>
@@ -843,7 +840,7 @@ object Similarity extends QueryModule {
         .join(exact, Seq("q_id", "vec_id"), "left")
         .select($"q_id", $"rank", $"vec_id", $"adc_dist",
           coalesce($"hit", lit(0L)).as("in_exact10"))
-      Scoped.materialize(emb)(out).orderBy($"q_id", $"rank")
+      out.orderBy($"q_id", $"rank")
     },
     Some {
       val subCtes = (0 until PqM).map { m =>

@@ -835,12 +835,11 @@ object TextOps extends QueryModule {
             element_at($"w", i + 1).as("w2")))).as("p"))
         .filter($"p.w1".isNotNull && $"p.w2".isNotNull)
         .select($"p.w1".as("w1"), $"p.w2".as("w2"))
-        .persist()
       val big = pairs.groupBy($"w1", $"w2").agg(count(lit(1)).as("c12"))
       val left = pairs.groupBy($"w1").agg(count(lit(1)).as("c1"))
       val right = pairs.groupBy($"w2").agg(count(lit(1)).as("c2"))
       val total = pairs.agg(count(lit(1)).as("n"))
-      val out = big.filter($"c12" >= PmiMinCount)
+      big.filter($"c12" >= PmiMinCount)
         .join(left, "w1").join(right, "w2")
         .crossJoin(broadcast(total))
         .withColumn("kk", greatest(lit(0),
@@ -853,8 +852,6 @@ object TextOps extends QueryModule {
         .select($"w1", $"w2", $"c12", $"c1", $"c2", $"q", $"pmi_bits")
         .orderBy($"pmi_bits".desc, $"q".desc, $"w1", $"w2")
         .limit(20)
-      Scoped.materialize(pairs)(out)
-        .orderBy($"pmi_bits".desc, $"q".desc, $"w1", $"w2")
     },
     Some(s"""
       WITH toks AS (

@@ -453,7 +453,6 @@ object WindowFeatures extends QueryModule {
           ($"value".cast(DecimalType(28, 2)) * 100).cast("long").as("cents"))
       val parted = ev.repartitionByRange($"cents", $"event_id")
         .withColumn("_pid", spark_partition_id())
-        .persist()
       val offsets = parted.groupBy($"_pid").agg(count(lit(1)).as("_cnt"))
         .withColumn("_offset",
           coalesce(sum($"_cnt").over(
@@ -473,7 +472,7 @@ object WindowFeatures extends QueryModule {
           min($"cents").as("lo_cents"),
           max($"cents").as("hi_cents"),
           sum($"cents").as("sum_cents"))
-      Scoped.materialize(parted)(binned).orderBy($"bin")
+      binned.orderBy($"bin")
     },
     Some(s"""
       WITH e AS (
@@ -1107,7 +1106,6 @@ object WindowFeatures extends QueryModule {
       import spark.implicits._
       val tb = tripleBarrier(spark, dir)
         .filter($"days_to_event" >= 1L)
-        .persist()
       val span = tb.select($"ticker", $"rn", $"days_to_event",
           explode(sequence(lit(1L), $"days_to_event")).as("off"))
         .withColumn("day_rn", $"rn" + $"off")
@@ -1123,9 +1121,6 @@ object WindowFeatures extends QueryModule {
           sum($"w_micro").as("sum_w_micro"),
           min($"uniq_milli").as("min_uniq_milli"),
           expr("sum(uniq_milli) div count(1)").as("mean_uniq_milli"))
-        .orderBy($"ticker")
-        // tb is a shared silver table; only the local persist closes here
-        .transform(df => Scoped.materialize(tb)(df))
         .orderBy($"ticker")
     },
     Some(s"""
@@ -1264,7 +1259,7 @@ object WindowFeatures extends QueryModule {
 
   private val q223 = QueryDef(
     "q223_stream_triple_barrier",
-    (outer, dir) => streamTripleBarrier(outer, dir, 2),
+    (outer, dir) => streamTripleBarrier(outer, dir, 4),
     Some(s"""
       WITH $tripleBarrierSql
       SELECT ticker, date, cents, label, days_to_event

@@ -115,42 +115,6 @@ object Streams extends QueryModule {
         $"event_type", $"post_count", $"total_score", $"max_score")
   }
 
-  /** Run a bounded streaming frame to completion through a FILE sink and
-    * re-read the result as a batch frame (the q43 round-trip pattern,
-    * generalized). The memory sink materializes the whole result on the
-    * driver — at 100× the q42 join output that is a driver OOM — so every
-    * query-path capture goes through foreachBatch → parquet instead;
-    * `MemoryStream`/memory sinks survive only inside StreamingSpec.
-    * "complete" mode re-emits the full result each micro-batch ⇒ overwrite
-    * per batch; "append"/"update" emit deltas ⇒ append per batch.
-    */
-  /** Final state-store census of the most recent [[runToParquet]] run:
-    * Σ numRowsTotal over the query's stateful operators at termination.
-    * −1 = no progress was recorded. StateBoundsSpec reads this to check
-    * every streaming query's MEASURED end-state against the bound
-    * declared in [[StateBounds]] — the stateful twin of the
-    * WindowBounds plan audit. Never read on a production path.
-    */
-  @volatile private[graft] var lastStateRows: Long = -1L
-
-  /** Test-only: observe the last progress object itself. */
-  @volatile private[graft] var progressAudit:
-      Option[org.apache.spark.sql.streaming.StreamingQueryProgress => Unit] = None
-
-  /** Replay feed builder shared by the stateful-replay queries
-    * (q223/q235/q240): write `df` as `nChunks` date-range parquet files
-    * with STRICTLY INCREASING mtimes, so the file stream source
-    * (maxFilesPerTrigger=1) consumes them in date order — the
-    * kafka-replay stand-in. `dayCol` must be a date column; the
-    * distinct-date collect is bounded driver model state (P12: ≤
-    * |trading days| rows). Returns the feed directory.
-    */
-  /** [[replayByDates]] for a LONG key column (doc ingestion replays,
-    * where the natural arrival order is the id sequence): same
-    * strictly-increasing-mtime chunked feed, ranges over the distinct
-    * key values. The distinct collect is bounded driver model state
-    * (P12: ≤ |ids| of a dimension-sized table).
-    */
   /** Feed memo (r13 optimization) — the [[graft.operators.Scoped]]
     * discipline applied to replay feeds: a feed is a DETERMINISTIC
     * function of (source plan, key column, chunk count) — five Series
@@ -171,14 +135,20 @@ object Streams extends QueryModule {
     s"$keyCol|$nChunks|" +
       df.queryExecution.analyzed.canonicalized.toString
 
-  /** r14 (guide §5 state / VERDICT r13 #8): the ten replay QueryDefs
-    * feed 2 chunks (was 4) — per micro-batch every stateful operator
-    * pays a fixed per-partition state-store open/commit, and the
-    * replay results are batch-boundary-independent BY CONTRACT (each
-    * family's spec re-proves equality at chunkings 4/6/7/9; the DuckDB
-    * oracle gates the values). Two chunks still cross a real batch
-    * boundary, so cross-batch state is exercised; the chunk count is a
-    * replay-harness parameter, not operator semantics.
+  // Chunk counts: nine of the ten replay QueryDefs feed 2 chunks — per
+  // micro-batch every stateful operator pays a fixed per-partition
+  // state-store open/commit, and the replay results are
+  // batch-boundary-independent BY CONTRACT (each family's spec re-proves
+  // equality at chunkings 4/6/7/9; the DuckDB oracle gates the values).
+  // q223 feeds 4, so the verified path also carries state across several
+  // batch boundaries; the chunk count is a replay-harness parameter, not
+  // operator semantics.
+
+  /** [[replayByDates]] for a LONG key column (doc ingestion replays,
+    * where the natural arrival order is the id sequence): same
+    * strictly-increasing-mtime chunked feed, ranges over the distinct
+    * key values. The distinct collect is bounded driver model state
+    * (P12: ≤ |ids| of a dimension-sized table).
     */
   private[graft] def replayByLongRanges(
       df: DataFrame, keyCol: String, nChunks: Int): String =
@@ -190,6 +160,14 @@ object Streams extends QueryModule {
         keys.map(k => org.apache.spark.sql.functions.lit(k)))
     })
 
+  /** Replay feed builder shared by the stateful-replay queries
+    * (q223/q235/q240): write `df` as `nChunks` date-range parquet files
+    * with STRICTLY INCREASING mtimes, so the file stream source
+    * (maxFilesPerTrigger=1) consumes them in date order — the
+    * kafka-replay stand-in. `dayCol` must be a date column; the
+    * distinct-date collect is bounded driver model state (P12: ≤
+    * |trading days| rows). Returns the feed directory.
+    */
   private[graft] def replayByDates(
       df: DataFrame, dayCol: String, nChunks: Int): String =
     feedMemo.computeIfAbsent(memoKey(df, dayCol, nChunks), _ => {
@@ -251,6 +229,19 @@ object Streams extends QueryModule {
     feed
   }
 
+  /** Run a bounded streaming frame to completion through a FILE sink and
+    * re-read the result as a batch frame (the q43 round-trip pattern,
+    * generalized). The memory sink materializes the whole result on the
+    * driver — at 100× the q42 join output that is a driver OOM — so every
+    * query-path capture goes through foreachBatch → parquet instead;
+    * `MemoryStream`/memory sinks survive only inside StreamingSpec.
+    * "complete" mode re-emits the full result each micro-batch ⇒ overwrite
+    * per batch; "append"/"update" emit deltas ⇒ append per batch.
+    * Inside [[graft.operators.Scoped.capture]] the finished run records a
+    * "stream" entry with its final state-row census (Σ numRowsTotal over
+    * the stateful operators at the last progress, −1 = none), which
+    * StateBoundsSpec checks against [[StateBounds]].
+    */
   private[graft] def runToParquet(df: DataFrame, mode: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     val spark = df.sparkSession
@@ -286,9 +277,8 @@ object Streams extends QueryModule {
         Files.createTempDirectory("graft_stream_ckpt_").toString)
       .start()
     q.awaitTermination()
-    lastStateRows = Option(q.lastProgress)
-      .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L)
-    Option(q.lastProgress).foreach(p => progressAudit.foreach(_(p)))
+    graft.operators.Scoped.stream(Option(q.lastProgress)
+      .map(_.stateOperators.map(_.numRowsTotal).sum).getOrElse(-1L))
     q.stop()
     // a stream that yielded no rows wrote no files — return an empty frame
     // with the stream's schema instead of letting parquet schema inference

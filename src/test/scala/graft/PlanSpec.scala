@@ -409,9 +409,7 @@ class PlanSpec extends AnyFunSuite {
     // asserts the physical operator actually appears for the two shapes
     // that rely on it: latest-per-key (q08) and grouped top-k (q39).
     Seq("q08_latest_per_key", "q39_knn_brute").foreach { q =>
-      val p =
-        if (q == "q39_knn_brute") materializedPlanOf(q)
-        else planOf(q)
+      val p = planOf(q)
       assert(p.contains("WindowGroupLimit"),
         s"$q lost its group-limit prune:\n" + p.linesIterator.take(25).mkString("\n"))
     }
@@ -512,20 +510,20 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q204: PQ codes and ADC LUT join broadcast — the corpus never shuffles by distance") {
-    val p = materializedPlanOf("q204_pq_adc_search")
+    val p = planOf("q204_pq_adc_search")
     // the (m, code) LUT join is a broadcast hash join
     assert(p.contains("BroadcastHashJoin"), p.linesIterator.take(30).mkString("\n"))
     assert(!p.contains("CartesianProduct"), "q204 went cartesian")
   }
 
   test("q205: anchor gram table broadcasts; candidates are bounded by the df window") {
-    val p = materializedPlanOf("q205_hard_negatives")
+    val p = planOf("q205_hard_negatives")
     assert(p.contains("BroadcastHashJoin"), p.linesIterator.take(30).mkString("\n"))
     assert(!p.contains("CartesianProduct"), "q205 went cartesian")
   }
 
   test("q207: bucket thresholds broadcast back to the doc scan (no per-doc rank window)") {
-    val p = materializedPlanOf("q207_ccnet_buckets")
+    val p = planOf("q207_ccnet_buckets")
     // no window operator on a per-doc key anywhere: thresholds come from
     // the value-domain histogram, docs bucket by broadcast compare
     assert(p.contains("BroadcastHashJoin"), p.linesIterator.take(40).mkString("\n"))
@@ -535,7 +533,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q210: pHash pairs come from band-bucket equi-join, never a cartesian product") {
-    val p = materializedPlanOf("q210_image_phash_dedup")
+    val p = planOf("q210_image_phash_dedup")
     assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
       p.contains("BroadcastHashJoin"), p.linesIterator.take(30).mkString("\n"))
     assert(!p.contains("CartesianProduct"), "q210 went cartesian")

@@ -70,4 +70,20 @@ class ScopedSpec extends AnyFunSuite {
     val (_, bs) = Scoped.capture(Scoped.materialize()(in))
     assert(planned(in) && bs.size === 1)
   }
+
+  test("a finished stream records its state rows, no plan, only inside capture") {
+    val feed = java.nio.file.Files.createTempDirectory("scoped_spec_feed_").toString
+    spark.range(10).selectExpr("id % 3 AS k").write.mode("overwrite").parquet(feed)
+    def counts() = spark.readStream.schema("k LONG").parquet(feed)
+      .groupBy("k").count()
+    val (out, bs) = Scoped.capture(
+      graft.streaming.Streams.runToParquet(counts(), "complete"))
+    assert(out.count() === 3L)
+    // one state row per key in the aggregation's store
+    assert(bs === Seq(Scoped.Barrier("stream", None, None, None, Some(3L))))
+    val (_, inner) = Scoped.capture(Scoped.stream(5L))
+    assert(inner.map(_.stateRows) === Seq(Some(5L)))
+    Scoped.stream(6L) // no recorder installed: dropped
+    assert(Scoped.capture(())._2.isEmpty)
+  }
 }

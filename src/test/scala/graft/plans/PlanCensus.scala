@@ -21,13 +21,15 @@ import scala.collection.mutable
   * depends on the walk order. The census records each shared build's plans
   * and the tables it reaches in turn (`bars_global_rn` reaches
   * `daily_bars`), so [[attributed]] can hand the plans out for any order.
-  * Checkpoint barriers are not parquet barriers and are left out.
+  * Checkpoint barriers are not parquet barriers and are left out of the
+  * plans; [[kinds]] still records every barrier kind a build reaches.
   */
 object PlanCensus {
 
   private sealed trait Node
   private final case class Plan(plan: LogicalPlan) extends Node
   private final case class Key(key: String) extends Node
+  private final case class Reached(kind: String) extends Node
 
   val queryNames: Seq[String] = SparkEntry.queries.keys.toSeq.sorted
   val silverNames: Seq[String] = Silver.tables.map(t => s"silver:${t.name}")
@@ -52,6 +54,7 @@ object PlanCensus {
         val own = mutable.ListBuffer.empty[Node]
         barriers.foreach { b =>
           val into = b.in.fold(own)(of)
+          into += Reached(b.kind)
           (b.kind, b.key) match {
             case ("materialize", _) => into += Plan(b.input.get.optimizedPlan)
             case ("shared", Some(k)) =>
@@ -78,6 +81,7 @@ object PlanCensus {
     def expand(nodes: Seq[Node]): Seq[LogicalPlan] = nodes.flatMap {
       case Plan(p) => Seq(p)
       case Key(k) => if (claimed.add(k)) expand(keyNodes.getOrElse(k, Nil)) else Nil
+      case Reached(_) => Nil
     }
     order.map(n => n -> builds(n).map(expand))
   }
@@ -90,4 +94,17 @@ object PlanCensus {
     }.flatten.toSet
     builds(name).fold(_ => Set.empty[String], keysIn)
   }
+
+  /** Every barrier kind ([[Scoped.Barrier]]`.kind`) a build reaches,
+    * directly or inside a shared table's build it reaches. */
+  def kinds(name: String): Set[String] = {
+    def of(nodes: Seq[Node]): Set[String] =
+      nodes.collect { case Reached(k) => k }.toSet
+    builds(name).fold(_ => Set.empty[String], of) ++
+      reached(name).flatMap(k => of(keyNodes.getOrElse(k, Nil)))
+  }
+
+  /** The queries (not silver builds) that reach a barrier of `kind`. */
+  def queriesReaching(kind: String): Seq[String] =
+    queryNames.filter(kinds(_).contains(kind))
 }

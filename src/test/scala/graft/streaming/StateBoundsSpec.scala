@@ -1,36 +1,35 @@
 package graft.streaming
 
 import graft.{SparkEntry, TestSpark}
+import graft.operators.Scoped
+import graft.plans.PlanCensus
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The streaming-state census CI: every declared StateBound re-runs its
-  * query on the fixture and asserts the MEASURED final state rows
-  * (Streams.lastStateRows, read off the query's last progress) sit
-  * within the declared limit recomputed from the input tables — the
-  * WindowBounds discipline applied to the other unbounded-growth class.
-  * Coverage: every stateful streaming query in the surface must carry a
-  * declaration.
+  * query on the fixture and asserts the MEASURED final state rows (the
+  * "stream" record [[Scoped.capture]] receives from the query's
+  * runToParquet run, read off its last progress) sit within the declared
+  * limit recomputed from the input tables — the WindowBounds discipline
+  * applied to the other unbounded-growth class. Coverage: every query the
+  * plan census sees run a stream must carry a declaration.
   */
 class StateBoundsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = TestSpark.Sf001
 
+  /** The final state rows of the last stream `q`'s build and collect ran,
+    * −1 when it ran none. */
+  private def stateRows(q: String): Long = {
+    val (_, bs) = Scoped.capture(SparkEntry.queries(q)(spark, dir).collect())
+    bs.filter(_.kind == "stream").lastOption.flatMap(_.stateRows).getOrElse(-1L)
+  }
+
   test("registry covers every runToParquet streaming query in the surface") {
-    // the streaming surface routed through runToParquet (q43 runs its
-    // own inline bronze sink with no stateful operator; q103 is the
-    // BATCH kafka scan)
-    val streaming = Set(
-      "q41_stream_features_15m", "q42_stream_static_join",
-      "q55_stateful_user_state", "q74_stream_session_window",
-      "q77_stream_dedup", "q86_stream_stream_join",
-      "q104_kafka_stream_features", "q128_transform_with_state",
-      "q136_stream_kmv_sketch", "q147_stream_outer_join",
-      "q157_stream_sliding_windows", "q173_stream_hll",
-      "q206_stream_heavy_users", "q223_stream_triple_barrier",
-      "q235_stream_dollar_bars", "q240_stream_cusum_events",
-      "q244_stream_imbalance_bars", "q253_stream_priority_sample",
-      "q265_stream_drift_monitor", "q268_stream_session_timeout",
-      "q271_stream_vpin", "q281_stream_kyle", "q290_stream_drawdown")
+    // the streaming surface routed through runToParquet, as the census
+    // observes it (q43 runs its own inline bronze sink with no stateful
+    // operator; q103 is the BATCH kafka scan)
+    val streaming = PlanCensus.queriesReaching("stream").toSet
+    assert(streaming.contains("q317_stream_quantile_sketch"), streaming)
     val undeclared = streaming -- StateBounds.names.toSet
     assert(undeclared.isEmpty, s"stateful queries without a StateBound: $undeclared")
     StateBounds.names.foreach { n =>
@@ -41,9 +40,7 @@ class StateBoundsSpec extends AnyFunSuite {
 
   test("measured final state rows respect every declared bound") {
     val failures = StateBounds.declared.flatMap { sb =>
-      Streams.lastStateRows = -1L
-      SparkEntry.queries(sb.query)(spark, dir).collect()
-      val measured = Streams.lastStateRows
+      val measured = stateRows(sb.query)
       val limit = sb.limit(spark, dir)
       // a stateless query reports no stateOperators rows (census 0)
       if (measured < 0) Some(s"${sb.query}: no progress recorded")
@@ -64,9 +61,7 @@ class StateBoundsSpec extends AnyFunSuite {
         "q235_stream_dollar_bars" -> StateBounds.declared
           .find(_.query == "q235_stream_dollar_bars").get)
       .foreach { case (n, sb) =>
-        Streams.lastStateRows = -1L
-        SparkEntry.queries(n)(spark, dir).collect()
-        assert(Streams.lastStateRows === sb.limit(spark, dir), n)
+        assert(stateRows(n) === sb.limit(spark, dir), n)
       }
   }
 }
